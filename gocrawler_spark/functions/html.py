@@ -14,7 +14,8 @@ body bytes:
 This module is the Spark-side equivalent: pure string → value
 functions used inside Arrow-batched fetch UDFs (plans/crawl.py), so
 the parsing cost rides in the same executor batch as the fetch and
-never touches Spark's row pipeline.
+never touches Spark's row pipeline (``fetch_and_parse`` adapts a
+raw-page fetch to the engine's ``fetch_fn``).
 
 The text conversion implements a deterministic, documented subset of
 html2text's behavior (full golden parity with the Go library is not
@@ -118,3 +119,16 @@ def parse_page(html: str) -> tuple[str, list[str]]:
     if isinstance(html, (bytes, bytearray)):
         html = html.decode("utf-8", errors="replace")
     return html_to_text(html), extract_links(html)
+
+
+def fetch_and_parse(fetch_html):
+    """Turn a raw-page fetch (url -> (html, ok)) into a CrawlEngine
+    ``fetch_fn`` (url -> (plain_text, links, ok)): the page is parsed
+    in the same fetch batch that downloaded it."""
+
+    def fetch(url: str):
+        raw, ok = fetch_html(url)
+        text, links = parse_page(raw) if ok else ("", [])
+        return text, links, ok
+
+    return fetch

@@ -175,17 +175,3 @@ def merge(a: DataFrame, b: DataFrame) -> DataFrame:
         )
 
     return a.unionByName(b).groupBy("shard").applyInPandas(orr, BLOOM_SCHEMA)
-
-
-def split_candidates(
-    bloom: DataFrame, cand: DataFrame, url_col: str = "url", n_shards: int = 64
-) -> tuple[DataFrame, DataFrame]:
-    """(probably_seen, definitely_new) — the F5 accelerator: only
-    probably_seen needs the exact anti-join; definitely_new skips it
-    (no-false-negative guarantee)."""
-    hits = probe(bloom, cand, url_col, n_shards).filter(F.col("maybe_seen")).select(
-        F.col("url").alias(url_col)
-    )
-    seen = cand.join(hits, url_col, "left_semi")
-    new = cand.join(hits, url_col, "left_anti")
-    return seen, new

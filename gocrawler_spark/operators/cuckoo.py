@@ -158,30 +158,34 @@ def _insert_all(table: np.ndarray, h: np.ndarray) -> int:
     b2 = _alt(b1[rem], fp[rem], nb)
     placed2 = _bulk_place(table, b2, fp[rem])
     tail_fp = fp[rem][~placed2]
-    tail_b = b2[~placed2]
-    bs = table.shape[1]
-    for cur_fp, cur_b in zip(tail_fp.tolist(), tail_b.tolist()):
+    _kick_place(table, tail_fp, b2[~placed2])
+    return int(len(tail_fp))
+
+
+def _kick_place(table: np.ndarray, fps: np.ndarray, buckets: np.ndarray) -> None:
+    """The eviction tail: place each fp starting at its bucket by the
+    classic kick loop (deterministic victim, MAX_KICKS bound), IN
+    PLACE. Raises on overflow — never drops a fingerprint."""
+    nb, bs = table.shape
+    for cur_fp, cur_b in zip(fps.tolist(), buckets.tolist()):
         cur_fp = np.uint32(cur_fp)
-        done = False
         for kick in range(MAX_KICKS):
             row = table[cur_b]
             empty = np.nonzero(row == 0)[0]
             if empty.size:
                 row[empty[0]] = cur_fp
-                done = True
                 break
             j = int((int(cur_fp) + kick) % bs)  # deterministic victim
             cur_fp, row[j] = row[j].copy(), cur_fp
             cur_b = int(
                 _alt(np.array([cur_b]), np.array([cur_fp], dtype=np.uint32), nb)[0]
             )
-        if not done:
+        else:
             raise ValueError(
                 f"cuckoo shard overflow after {MAX_KICKS} kicks "
                 f"(load {int((table != 0).sum())}/{table.size}); "
                 "size the shard with geometry() or raise n_shards"
             )
-    return int(len(tail_fp))
 
 
 def _hash_cols(df: DataFrame, url_col: str, n_shards: int) -> DataFrame:
@@ -368,27 +372,7 @@ def merge(a: DataFrame, b: DataFrame) -> DataFrame:
             rem = ~placed
             alt_b = _alt(bkt[rem].astype(np.int64), fps[rem], nb)
             placed2 = _bulk_place(acc, alt_b, fps[rem])
-            for cur_fp, cur_b in zip(
-                fps[rem][~placed2].tolist(), alt_b[~placed2].tolist()
-            ):
-                cur_fp = np.uint32(cur_fp)
-                for kick in range(MAX_KICKS):
-                    row = acc[cur_b]
-                    empty = np.nonzero(row == 0)[0]
-                    if empty.size:
-                        row[empty[0]] = cur_fp
-                        break
-                    j = int((int(cur_fp) + kick) % bs)
-                    cur_fp, row[j] = row[j].copy(), cur_fp
-                    cur_b = int(
-                        _alt(
-                            np.array([cur_b]),
-                            np.array([cur_fp], dtype=np.uint32),
-                            nb,
-                        )[0]
-                    )
-                else:
-                    raise ValueError("cuckoo merge overflow; grow geometry")
+            _kick_place(acc, fps[rem][~placed2], alt_b[~placed2])
         return pd.DataFrame(
             {
                 "shard": [int(key[0])],
@@ -400,18 +384,3 @@ def merge(a: DataFrame, b: DataFrame) -> DataFrame:
         )
 
     return a.unionByName(b).groupBy("shard").applyInPandas(mg, CUCKOO_SCHEMA)
-
-
-def split_candidates(
-    cf: DataFrame, cand: DataFrame, url_col: str = "url", n_shards: int = 64
-) -> tuple[DataFrame, DataFrame]:
-    """(probably_seen, definitely_new) — drop-in for
-    bloom.split_candidates: same F5-accelerator contract (only
-    probably_seen needs the exact anti-join; no false negatives for
-    live keys)."""
-    hits = probe(cf, cand, url_col, n_shards).filter(F.col("maybe_seen")).select(
-        F.col("url").alias(url_col)
-    )
-    seen = cand.join(hits, url_col, "left_semi")
-    new = cand.join(hits, url_col, "left_anti")
-    return seen, new

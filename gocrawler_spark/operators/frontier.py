@@ -224,9 +224,9 @@ def merge_into_frontier(
         )
         # probably_seen is consumed twice (count-update probe + FP anti-join)
         # — pin it so the bloom probe runs ONCE. definitely_new is then the
-        # anti-join against the PINNED seen set, not split_candidates'
-        # plan: the latter re-references the unpinned probe, so its later
-        # materialization would run the cogroup probe a second time.
+        # anti-join against the PINNED seen set, not against the unpinned
+        # probe, whose later materialization would run the cogroup probe
+        # a second time.
         # Broadcast only while probably_seen is actually small: true dups
         # + FPR·new is wave-bounded in the normal case, but a dup-heavy
         # wave can exceed the broadcast limit, so fall through to the

@@ -32,7 +32,7 @@ Scale design (100 TB / 1e10-URL frontier):
 - append-only state (pages, signatures, logs, corpus/host counters)
   is DELTA-ACCUMULATED: each wave pins only its small delta and the
   state field is a lazy union of the pinned pieces, compacted into a
-  single pin every `compact_every` waves — the Iceberg delta+compact
+  single pin every COMPACT_EVERY waves — the Iceberg delta+compact
   pattern. This cuts the eager materializations per wave roughly in
   half versus re-checkpointing every full table every wave, and at
   1e10-row scale it is the only shape that works at all (re-writing
@@ -45,9 +45,8 @@ crawler.go:1082-1406,1477-1543.
 
 from __future__ import annotations
 
-import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Iterator
 
 import pandas as pd
@@ -65,6 +64,8 @@ from gocrawler_spark.operators import images as IM
 from gocrawler_spark.operators import politeness as PO
 from gocrawler_spark.pins import PinSet
 from gocrawler_spark.plans.store import TableStore
+
+COMPACT_EVERY = 8  # waves between collapses of the delta-accumulated state
 
 FETCH_SCHEMA = T.StructType(
     [
@@ -86,28 +87,6 @@ def pandas_fetcher(fetch_fn) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.D
             out = {"url": [], "content": [], "links": [], "ok": []}
             for u in pdf["url"]:
                 c, l, ok = fetch_fn(u)
-                out["url"].append(u)
-                out["content"].append(c)
-                out["links"].append(l)
-                out["ok"].append(ok)
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def pandas_html_fetcher(html_fetch_fn) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """S2 with real markup: wrap a raw-page fetch (url -> (html, ok))
-    and derive (plain_text, links) from the body IN the same Arrow
-    batch via functions/html.py — the downloadUrl product pair
-    (crawler.go:219,235) as one vectorized stage."""
-    from gocrawler_spark.functions import html as HT
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"url": [], "content": [], "links": [], "ok": []}
-            for u in pdf["url"]:
-                raw, ok = html_fetch_fn(u)
-                c, l = HT.parse_page(raw) if ok else ("", [])
                 out["url"].append(u)
                 out["content"].append(c)
                 out["links"].append(l)
@@ -141,7 +120,6 @@ class CrawlEngine:
         spark: SparkSession,
         cfg: CrawlConfig,
         fetch_fn=None,
-        html_fetch_fn=None,
         lang_gate=CU.default_lang_gate,
         checkpoint_dir: str | None = None,
         with_images: bool = False,
@@ -150,13 +128,11 @@ class CrawlEngine:
         use_cuckoo: bool = False,
         cuckoo_shards: int = 16,
         use_robots: bool = False,
-        wave_budget_ms: int = 4000,
         robots_fn=None,
         checkpoint_every: int = 1,
         use_bucketed_frontier: bool = False,
         frontier_buckets: int = 32,
         index_transport=None,
-        compact_every: int = 8,
         fetch_salt: int = 1,
     ):
         from gocrawler_spark.sources import synthetic_web
@@ -164,7 +140,6 @@ class CrawlEngine:
         self.spark = spark
         self.cfg = cfg
         self.fetch_fn = fetch_fn or synthetic_web.fetch_page
-        self.html_fetch_fn = html_fetch_fn
         self.lang_gate = lang_gate
         self.checkpoint_dir = checkpoint_dir
         self.with_images = with_images
@@ -183,11 +158,9 @@ class CrawlEngine:
         self.cuckoo_shards = cuckoo_shards
         self._cuckoo_cap = 200_000
         self.use_robots = use_robots
-        self.wave_budget_ms = wave_budget_ms
         self.robots_fn = robots_fn
         self.checkpoint_every = checkpoint_every
         self.index_transport = index_transport
-        self.compact_every = compact_every
         self.fetch_salt = max(1, int(fetch_salt))
         self.store = TableStore(checkpoint_dir) if checkpoint_dir else None
         self.pins = PinSet(spark)
@@ -199,15 +172,6 @@ class CrawlEngine:
         self._pieces: dict[str, list[DataFrame]] = {}
         self._live: list[DataFrame] = []
         self._next_seq: int = 0
-        # delta checkpointing: _pending holds each family's appended
-        # deltas not yet flushed to a parquet segment; _flushed_segs
-        # holds segment manifest entries flushed but not yet named by
-        # a committed manifest; _seg_counter gives segments stable
-        # monotonic names (resume continues after the committed count,
-        # so a crash-orphaned segment is overwritten on replay).
-        self._pending: dict[str, list[DataFrame]] = {}
-        self._flushed_segs: dict[str, list[dict]] = {}
-        self._seg_counter: dict[str, int] = {}
         # scale mode: frontier state lives in a domain-bucketed,
         # (domain, url)-sorted table so the per-wave plans never
         # shuffle it (plans/bucketed.py). Mutually exclusive with the
@@ -319,46 +283,16 @@ class CrawlEngine:
         self._pieces[family].append(delta)
         setattr(self.state, family, self._union_view(family))
         if self.store is not None:
-            self._pending.setdefault(family, []).append(delta)
-
-    def _flush_pending(self) -> None:
-        """Write every family's not-yet-persisted delta rows to a
-        parquet segment. Segments stay INVISIBLE until a manifest
-        commit names them (checkpoint); flushing early is safe —
-        crash-orphaned segments are ignored by readers and
-        overwritten on replay. Called by checkpoint() and, crucially,
-        by _compact(): the pending plans reference the wave pins the
-        compaction is about to free."""
-        if self.store is None:
-            return
-        for fam, deltas in list(self._pending.items()):
-            if not deltas:
-                continue
-            df = deltas[0]
-            for d in deltas[1:]:
-                df = df.unionByName(d)
-            k = self._seg_counter.get(fam, 0)
-            seg = self.store.write_segment(
-                fam, f"seg{k:06d}", df, self.state.wave
-            )
-            if seg["row_count"] > 0:
-                self._seg_counter[fam] = k + 1
-                self._flushed_segs.setdefault(fam, []).append(seg)
-            else:
-                # nothing appended this cycle: drop the empty segment
-                # (the index is reused and overwritten next flush)
-                import shutil
-
-                shutil.rmtree(seg["path"], ignore_errors=True)
-            self._pending[fam] = []
+            self.store.append(family, delta)
 
     def _compact(self) -> None:
         """Collapse every piece list into one pinned table and reset
         the live set — bounds plan depth and frees the content-heavy
-        early-wave pins (the Iceberg compaction analog). Pending
-        checkpoint deltas are flushed to disk first: their plans
-        reference the pins being freed."""
-        self._flush_pending()
+        early-wave pins (the Iceberg compaction analog). The store's
+        pending checkpoint deltas are flushed to disk first: their
+        plans reference the pins being freed."""
+        if self.store is not None:
+            self.store.flush(self.state.wave)
         for fam in list(self._pieces):
             view = self._union_view(fam)
             piece = self._pin(view)
@@ -445,10 +379,7 @@ class CrawlEngine:
             # allowed URLs a host could legally fetch this wave — with
             # continually minted disallowed URLs outranking them, that
             # deferral can starve indefinitely
-            g = PO.token_budget_cap(
-                gated.filter(F.col("robots_allowed")),
-                wave_budget_ms=self.wave_budget_ms,
-            )
+            g = PO.token_budget_cap(gated.filter(F.col("robots_allowed")))
             # disallowed -> refused (status 3, no fetch); over-budget ->
             # deferred (stay pending, compete again next wave)
             blocked = gated.filter(~F.col("robots_allowed"))
@@ -497,11 +428,7 @@ class CrawlEngine:
         fetchable = to_fetch.join(refused, "url", "left_anti")
         # scale: repartition by domain bounds per-task host fan-out and
         # keeps politeness group-local; per_host_budget bounds skew.
-        fetch_udf = (
-            pandas_html_fetcher(self.html_fetch_fn)
-            if self.html_fetch_fn is not None
-            else pandas_fetcher(self.fetch_fn)
-        )
+        fetch_udf = pandas_fetcher(self.fetch_fn)
         # the fetch runs EXACTLY once: fetched_new is the only pin that
         # executes the UDF; everything downstream (page cache delta,
         # failure delta, the wave view) is a lazy projection of it.
@@ -719,7 +646,7 @@ class CrawlEngine:
                     ),
                 )
             )
-        if self.compact_every and wave % self.compact_every == 0:
+        if wave % COMPACT_EVERY == 0:
             self._compact()
             if self.use_bloom:
                 self._maybe_regrow_bloom()
@@ -732,7 +659,7 @@ class CrawlEngine:
         at a fixed expected_keys_per_shard and OR-merged, so the bit
         arrays never grow while cumulative keys do — past capacity the
         bits saturate and FPR degrades toward 1 SILENTLY, collapsing
-        split_candidates into all-probably-seen (correct but the
+        the merge's probe split into all-probably-seen (correct but the
         accelerator is gone, plus a wasted probe per wave).
 
         n_keys per shard is an upper bound on inserted keys (merge
@@ -741,7 +668,7 @@ class CrawlEngine:
         filter is REBUILT from the frontier's URLs — the authoritative
         seen set, so the no-false-negative invariant is restored
         exactly — with per-shard capacity sized 4x the measured load.
-        Cost: one build job every compact_every waves at worst;
+        Cost: one build job every COMPACT_EVERY waves at worst;
         amortized O(1) rebuilds per capacity doubling."""
         import math
 
@@ -809,29 +736,11 @@ class CrawlEngine:
         retired = self._pin(urls.select("url").distinct())
         self._live.append(retired)
         if self.store is not None:
-            # Iceberg-style row-level delete for the parquet shim:
-            # flush every pending APPEND first (segment order is the
-            # apply order, so rows appended before the retire must
-            # land in earlier segments), then write the retired keys
-            # as a TOMBSTONE segment for each url-keyed family. The
-            # reader folds segments sequentially and anti-joins each
-            # tombstone against everything before it — a later
-            # re-fetch appends after the tombstone and survives.
-            self._flush_pending()
+            # row-level delete for the url-keyed families: rows
+            # appended before the retire are deleted on load, a later
+            # re-fetch appends after the tombstone and survives
             for fam in ("pages", "signatures"):
-                k = self._seg_counter.get(fam, 0)
-                seg = self.store.write_segment(
-                    fam, f"seg{k:06d}", retired, st.wave
-                )
-                if seg["row_count"] > 0:
-                    seg["kind"] = "tombstone"
-                    seg["key"] = "url"
-                    self._seg_counter[fam] = k + 1
-                    self._flushed_segs.setdefault(fam, []).append(seg)
-                else:
-                    import shutil
-
-                    shutil.rmtree(seg["path"], ignore_errors=True)
+                self.store.tombstone(fam, retired, st.wave)
         st.cuckoo = self._pin(
             CK.delete(st.cuckoo, retired, n_shards=self.cuckoo_shards)
         )
@@ -886,16 +795,16 @@ class CrawlEngine:
         return self.retire(stale)
 
     def checkpoint(self) -> None:
-        """Commit a snapshot: flush pending delta segments, rewrite
-        the mutating tables (frontier/bloom/robots — row-level MERGE
-        persistence is out of scope for the parquet shim; in bucketed
-        scale mode the frontier already lives in its own disk-backed
-        table), and atomically commit the manifest naming everything.
+        """Commit a snapshot through the store: it flushes pending delta
+        segments, rewrites the mutating tables (frontier/bloom/robots —
+        row-level MERGE persistence is out of scope for the parquet
+        shim; in bucketed scale mode the frontier already lives in its
+        own disk-backed table), and atomically commits the manifest
+        naming everything.
         Per-checkpoint I/O for the append-only families is O(rows
         appended since the last checkpoint), not O(state)."""
         if self.store is None:
             return
-        self._flush_pending()
         st = self.state
         self.store.commit(
             st.wave,
@@ -905,20 +814,14 @@ class CrawlEngine:
                 "cuckoo": st.cuckoo,
                 "robots": st.robots,
             },
-            delta_segments={
-                f: segs for f, segs in self._flushed_segs.items() if segs
-            },
             metrics={"wave": st.wave},
         )
-        self._flushed_segs = {}
 
     def snapshot_files(self, out_dir: str, baseline=None) -> dict:
         """S8 checkpoint file emission (crawler.go:1294-1341): write
         ``corpusFrequencies.txt`` (all.num format, W1 total order) and —
         when a baseline corpus frame is supplied — the A6
         background-subtracted ``corpusNoEngFrequencies.txt``."""
-        import os
-
         from gocrawler_spark.sinks import corpus_files as CF
 
         if baseline is not None:
@@ -961,12 +864,6 @@ class CrawlEngine:
                 eng._pieces[name] = [piece]
                 setattr(st, name, piece)
         eng._live = [p[0] for p in eng._pieces.values()]
-        # continue segment numbering after the committed count so a
-        # replayed wave overwrites any crash-orphaned segment dir
-        man = eng.store.read_manifest() or {"tables": {}}
-        for nm, entry in man["tables"].items():
-            if entry.get("mode") == "delta":
-                eng._seg_counter[nm] = len(entry["segments"])
         m = st.frontier.agg(F.max("seq")).first()[0]
         eng._next_seq = (m if m is not None else -1) + 1
         if eng.use_bloom and "bloom" not in tables:

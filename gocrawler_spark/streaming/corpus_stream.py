@@ -25,7 +25,9 @@ proper stream:
   cadence;
 - `merge_stream_into_corpus`: foreachBatch MERGE of per-batch token
   deltas into a parquet corpus_freq table — the same merge_freq
-  operator the wave engine uses, applied incrementally.
+  operator the wave engine uses, applied incrementally, committed
+  through a full-mode ``TableStore`` table (plans/store.py) like every
+  other durable state.
 
 Scale: state is keyed by token / signature — both hash-partitioned by
 the state store; per-batch shuffle is the same explode→groupBy plan
@@ -37,10 +39,6 @@ cross-batch state accumulation + checkpoint restart equivalence.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,6 +46,7 @@ from pyspark.sql import types as T
 from gocrawler_spark.config import CrawlConfig
 from gocrawler_spark.functions import text as TX
 from gocrawler_spark.operators import corpus as CO
+from gocrawler_spark.plans.store import TableStore
 
 ACCEPTED_SCHEMA = T.StructType(
     [
@@ -100,23 +99,9 @@ def windowed_doc_rate(docs: DataFrame, watermark: str = "5 minutes") -> DataFram
     )
 
 
-_STATE_MANIFEST = "_state_manifest.json"
-
-
-def _read_state_manifest(state_path: str) -> dict | None:
-    p = os.path.join(state_path, _STATE_MANIFEST)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
 def read_corpus_state(spark: SparkSession, state_path: str) -> DataFrame | None:
     """Last committed corpus_freq state, or None before the first batch."""
-    man = _read_state_manifest(state_path)
-    if man is None:
-        return None
-    return spark.read.parquet(man["dir"])
+    return TableStore(state_path).load_table(spark, "corpus_freq")
 
 
 def corpus_upsert(cfg: CrawlConfig, state_path: str):
@@ -124,39 +109,30 @@ def corpus_upsert(cfg: CrawlConfig, state_path: str):
     direct replay testing).
 
     Executor-side merge, no driver collect: each batch's token deltas
-    are merged with the committed state and written to a NEW versioned
-    directory; a manifest os.replace is the commit point (the TableStore
-    pattern, plans/store.py). At 100 TB state this is the same
+    are merged with the committed state and committed as a NEW version
+    of a full-mode ``TableStore`` table rooted at ``state_path``
+    (plans/store.py); the store's snapshot GC removes superseded
+    versions. At 100 TB state this is the same
     write-new-version-then-swap-pointer shape as an Iceberg MERGE.
 
-    Idempotent under foreachBatch's at-least-once contract: the manifest
-    records the last applied batch_id, and a replayed batch (crash after
-    commit, before the streaming checkpoint advanced) is skipped instead
-    of double-counted.
+    Idempotent under foreachBatch's at-least-once contract: the
+    manifest's commit id is the last applied batch_id, and a replayed
+    batch (crash after commit, before the streaming checkpoint
+    advanced) is skipped instead of double-counted.
     """
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        man = _read_state_manifest(state_path)
-        if man is not None and batch_id <= man["batch_id"]:
+        store = TableStore(state_path)
+        if batch_id <= store.last_commit():
             return  # replayed batch: its deltas are already in the state
         delta = (
             batch.select(F.explode(TX.analyzed_tokens(F.col("curated"), cfg)).alias("token"))
             .groupBy("token")
             .agg(F.count(F.lit(1)).alias("count"))
         )
-        if man is not None:
-            merged = CO.merge_freq(spark.read.parquet(man["dir"]), delta)
-        else:
-            merged = delta
-        new_dir = os.path.join(state_path, f"v{batch_id:09d}")
-        merged.write.mode("overwrite").parquet(new_dir)
-        tmp = os.path.join(state_path, "." + _STATE_MANIFEST + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "dir": new_dir}, f)
-        os.replace(tmp, os.path.join(state_path, _STATE_MANIFEST))  # commit
-        if man is not None:
-            shutil.rmtree(man["dir"], ignore_errors=True)
+        prev = store.load_table(batch.sparkSession, "corpus_freq")
+        merged = delta if prev is None else CO.merge_freq(prev, delta)
+        store.commit(batch_id, {"corpus_freq": merged})
 
     return upsert
 

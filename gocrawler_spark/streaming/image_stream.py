@@ -12,32 +12,29 @@ streaming consumer that validates and commits them:
   40 dB for lossy codecs + byte-equal caption + phash recompute,
   operators/images.py) applied to the stream — mapInPandas works
   unchanged on streaming frames, payload bytes never shuffle;
-- ``ingest_images``: foreachBatch commit — every batch writes its
-  ACCEPTED rows (validation passed) to a versioned directory and
-  advances an atomic manifest, with rejected rows quarantined beside
-  them. Idempotent under foreachBatch's at-least-once contract: each
-  batch's directory is keyed by batch_id and the manifest records the
-  last applied id, so a replayed batch overwrites its own output and
-  is skipped at commit (same pattern as corpus_stream.corpus_upsert);
-- ``read_images_state`` / ``read_rejects``: the committed table.
+- ``ingest_images``: foreachBatch commit through a ``TableStore``
+  (plans/store.py) rooted at the state path — every batch appends its
+  ACCEPTED rows (validation passed) to the ``accepted`` delta table
+  and its rejected rows to the ``rejects`` quarantine, and one store
+  commit makes both visible. Idempotent under foreachBatch's
+  at-least-once contract: the manifest's commit id is the last
+  applied batch_id, so a replayed batch is skipped (the same store
+  commit as corpus_stream.corpus_upsert);
+- ``read_images_state`` / ``read_rejects``: the committed tables.
 
 Scale: per-batch work is one mapInPandas decode pass (Arrow batches,
 no per-row Python) + one filtered append; no shuffle at all unless a
-downstream consumer groups. The manifest-swap commit is the same
+downstream consumer groups. The store commit is the same
 write-new-then-swap-pointer shape as an Iceberg append.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gocrawler_spark.operators import images as IM
-
-_MANIFEST = "_images_manifest.json"
+from gocrawler_spark.plans.store import TableStore
 
 
 def image_batches_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -64,56 +61,35 @@ def streaming_validate(images: DataFrame, psnr_floor: float = 40.0) -> DataFrame
     return v.withColumn("accepted", ok)
 
 
-def _read_manifest(state_path: str) -> dict | None:
-    p = os.path.join(state_path, _MANIFEST)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
 def read_images_state(spark: SparkSession, state_path: str) -> DataFrame | None:
     """All committed accepted-image batches, or None before batch 0."""
-    man = _read_manifest(state_path)
-    if man is None or not man["dirs"]:
-        return None
-    return spark.read.parquet(*man["dirs"])
+    return TableStore(state_path).load_table(spark, "accepted")
 
 
 def read_rejects(spark: SparkSession, state_path: str) -> DataFrame | None:
-    man = _read_manifest(state_path)
-    if man is None or not man["reject_dirs"]:
-        return None
-    return spark.read.parquet(*man["reject_dirs"])
+    return TableStore(state_path).load_table(spark, "rejects")
 
 
 def read_scores_state(spark: SparkSession, state_path: str) -> DataFrame | None:
     """All committed score batches (score-on-ingest), or None."""
-    man = _read_manifest(state_path)
-    if man is None or not man.get("score_dirs"):
-        return None
-    return spark.read.parquet(*man["score_dirs"])
+    return TableStore(state_path).load_table(spark, "scores")
 
 
 def image_upsert(state_path: str, psnr_floor: float = 40.0, score: bool = False):
     """The foreachBatch body for ingest_images (exposed for replay
-    testing). Accepted payload rows append as v{batch}/; rejects (any
-    failed validation check) quarantine as rej{batch}/ with their
-    verdict columns; with ``score=True`` the accepted rows are ALSO
-    run through the batched-inference harness
-    (operators/inference.infer_batched) and their scores append as
-    s{batch}/ — score-on-ingest, so a payload is decoded while it is
+    testing). Accepted payload rows append to the ``accepted`` table;
+    rejects (any failed validation check) quarantine in ``rejects``
+    with their verdict columns; with ``score=True`` the accepted rows
+    are ALSO run through the batched-inference harness
+    (operators/inference.infer_batched) and their scores append to
+    ``scores`` — score-on-ingest, so a payload is decoded while it is
     already hot instead of by a second pass over the table later. One
-    manifest swap commits all of it, so scores can never drift out of
+    store commit covers all of it, so scores can never drift out of
     sync with the accepted table under replay."""
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        man = _read_manifest(state_path) or {
-            "batch_id": -1,
-            "dirs": [],
-            "reject_dirs": [],
-        }
-        if batch_id <= man["batch_id"]:
+        store = TableStore(state_path)
+        if batch_id <= store.last_commit():
             return  # replayed batch — already committed
         # a crawl fleet can land the same image_id twice in one
         # trigger's file set; joining the raw batch with its own
@@ -132,54 +108,23 @@ def image_upsert(state_path: str, psnr_floor: float = 40.0, score: bool = False)
         v = streaming_validate(batch, psnr_floor=psnr_floor).select(
             "image_id", "accepted", "psnr_db"
         )
-        # persist the validated batch: the two counts + two writes below
+        # persist the validated batch: the segment writes below would
         # otherwise each re-run the decode/PSNR pass over every payload
-        # (4x decode per batch — the dominant ingest cost at scale)
+        # (the dominant ingest cost at scale)
         joined = batch.join(v, "image_id").persist()
         try:
-            acc_dir = os.path.join(state_path, f"v{batch_id:09d}")
-            rej_dir = os.path.join(state_path, f"rej{batch_id:09d}")
             accepted = joined.filter(F.col("accepted")).drop(
                 "accepted", "psnr_db"
             )
-            rejected = joined.filter(~F.col("accepted")).drop("accepted")
-            # ONE bookkeeping action per micro-batch, not one per
-            # split: both emptiness decisions come from a single
-            # aggregate over the persisted batch
-            row = joined.agg(
-                F.count(F.when(F.col("accepted"), 1)).alias("n_acc"),
-                F.count(F.when(~F.col("accepted"), 1)).alias("n_rej"),
-            ).first()
-            n_acc, n_rej = row["n_acc"], row["n_rej"]
-            dirs = list(man["dirs"])
-            rejs = list(man["reject_dirs"])
-            scds = list(man.get("score_dirs", []))
-            if n_acc:
-                accepted.write.mode("overwrite").parquet(acc_dir)
-                dirs.append(acc_dir)
-                if score:
-                    from gocrawler_spark.operators import inference as INF
+            store.append("accepted", accepted)
+            store.append(
+                "rejects", joined.filter(~F.col("accepted")).drop("accepted")
+            )
+            if score:
+                from gocrawler_spark.operators import inference as INF
 
-                    sc_dir = os.path.join(state_path, f"s{batch_id:09d}")
-                    INF.infer_batched(accepted).write.mode("overwrite").parquet(
-                        sc_dir
-                    )
-                    scds.append(sc_dir)
-            if n_rej:
-                rejected.write.mode("overwrite").parquet(rej_dir)
-                rejs.append(rej_dir)
-            tmp = os.path.join(state_path, "." + _MANIFEST + ".tmp")
-            with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "batch_id": batch_id,
-                        "dirs": dirs,
-                        "reject_dirs": rejs,
-                        "score_dirs": scds,
-                    },
-                    f,
-                )
-            os.replace(tmp, os.path.join(state_path, _MANIFEST))  # commit
+                store.append("scores", INF.infer_batched(accepted))
+            store.commit(batch_id, {})
         finally:
             joined.unpersist()
 
@@ -197,7 +142,6 @@ def ingest_images(
     returns the streaming query (availableNow trigger). With
     ``score=True``, accepted rows are inference-scored in the same
     commit (score-on-ingest)."""
-    os.makedirs(state_path, exist_ok=True)
     return (
         images.writeStream.foreachBatch(
             image_upsert(state_path, psnr_floor, score=score)

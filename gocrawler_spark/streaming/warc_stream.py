@@ -12,32 +12,28 @@ and the bridge from the durable fetch log to queryable tables:
 - ``parse``: ``sinks.warc.parse_segments`` applied to the stream —
   mapInPandas runs unchanged on streaming frames, one task per
   segment file, payload bytes never shuffle;
-- ``ingest_warc``: foreachBatch commit — digest-verified records
-  append as a versioned parquet dir per batch, digest-failed records
-  quarantine beside them, one atomic manifest swap commits both.
+- ``ingest_warc``: foreachBatch commit through a ``TableStore``
+  (plans/store.py) rooted at the state path — digest-verified records
+  append to the ``records`` delta table, digest-failed records
+  quarantine in ``rejects``, one store commit makes both visible.
   Idempotent under foreachBatch's at-least-once contract: the
-  manifest records the last applied batch_id and a replayed batch
-  (crash after the write, before the streaming checkpoint commit) is
-  skipped — same pattern as ``corpus_stream.corpus_upsert`` /
-  ``image_stream.image_upsert``.
+  manifest's commit id is the last applied batch_id, and a replayed
+  batch (crash after the write, before the streaming checkpoint
+  commit) is skipped — the same store commit as
+  ``corpus_stream.corpus_upsert`` / ``image_stream.image_upsert``.
 
 Scale: per-batch work is one parse pass over the new segments + two
-filtered appends; no shuffle. State growth is one parquet dir per
-batch — a production deployment compacts old dirs the same way the
-TableStore folds delta segments (plans/store.py).
+filtered appends; no shuffle. State growth is one delta segment per
+non-empty table per batch.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gocrawler_spark.plans.store import TableStore
 from gocrawler_spark.sinks import warc as W
-
-_MANIFEST = "_warc_manifest.json"
 
 
 #: binaryFile's fixed schema — streaming sources require it stated.
@@ -56,29 +52,15 @@ def warc_segments_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-def _read_manifest(state_path: str) -> dict | None:
-    p = os.path.join(state_path, _MANIFEST)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
 def read_warc_state(spark: SparkSession, state_path: str) -> DataFrame | None:
     """All committed digest-verified records, or None before batch 0."""
-    man = _read_manifest(state_path)
-    if man is None or not man["dirs"]:
-        return None
-    return spark.read.parquet(*man["dirs"])
+    return TableStore(state_path).load_table(spark, "records")
 
 
 def read_warc_rejects(
     spark: SparkSession, state_path: str
 ) -> DataFrame | None:
-    man = _read_manifest(state_path)
-    if man is None or not man["reject_dirs"]:
-        return None
-    return spark.read.parquet(*man["reject_dirs"])
+    return TableStore(state_path).load_table(spark, "rejects")
 
 
 def warc_upsert(state_path: str):
@@ -86,45 +68,15 @@ def warc_upsert(state_path: str):
     testing)."""
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        man = _read_manifest(state_path) or {
-            "batch_id": -1,
-            "dirs": [],
-            "reject_dirs": [],
-        }
-        if batch_id <= man["batch_id"]:
+        store = TableStore(state_path)
+        if batch_id <= store.last_commit():
             return  # replayed batch — already committed
         parsed = W.parse_segments(batch).persist()
         try:
-            acc_dir = os.path.join(state_path, f"v{batch_id:09d}")
-            rej_dir = os.path.join(state_path, f"rej{batch_id:09d}")
-            accepted = parsed.filter(F.col("digest_ok")).drop("digest_ok")
-            rejected = parsed.filter(~F.col("digest_ok")).drop("digest_ok")
-            dirs = list(man["dirs"])
-            rejs = list(man["reject_dirs"])
-            # ONE bookkeeping action per micro-batch, not one per
-            # split (the batch is persisted, but each count is still a
-            # driver action round trip)
-            row = parsed.agg(
-                F.count(F.when(F.col("digest_ok"), 1)).alias("n_acc"),
-                F.count(F.when(~F.col("digest_ok"), 1)).alias("n_rej"),
-            ).first()
-            if row["n_acc"]:
-                accepted.write.mode("overwrite").parquet(acc_dir)
-                dirs.append(acc_dir)
-            if row["n_rej"]:
-                rejected.write.mode("overwrite").parquet(rej_dir)
-                rejs.append(rej_dir)
-            tmp = os.path.join(state_path, "." + _MANIFEST + ".tmp")
-            with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "batch_id": batch_id,
-                        "dirs": dirs,
-                        "reject_dirs": rejs,
-                    },
-                    f,
-                )
-            os.replace(tmp, os.path.join(state_path, _MANIFEST))  # commit
+            ok = F.col("digest_ok")
+            store.append("records", parsed.filter(ok).drop("digest_ok"))
+            store.append("rejects", parsed.filter(~ok).drop("digest_ok"))
+            store.commit(batch_id, {})
         finally:
             parsed.unpersist()
 
@@ -136,7 +88,6 @@ def ingest_warc(
 ):
     """Parse-verify-commit the WARC segment stream into the versioned
     record table; returns the streaming query (availableNow trigger)."""
-    os.makedirs(state_path, exist_ok=True)
     return (
         segments.writeStream.foreachBatch(warc_upsert(state_path))
         .option("checkpointLocation", checkpoint_dir)

@@ -88,9 +88,13 @@ def test_merge_is_monotone_union(spark, bloom, seen_and_new):
 def test_split_accelerator(bloom, seen_and_new):
     seen, new = seen_and_new
     cand = seen.limit(500).unionByName(new.limit(500))
-    probably_seen, definitely_new = B.split_candidates(
-        bloom, cand, n_shards=N_SHARDS
+    hits = (
+        B.probe(bloom, cand, n_shards=N_SHARDS)
+        .filter(F.col("maybe_seen"))
+        .select("url")
     )
+    probably_seen = cand.join(hits, "url", "left_semi")
+    definitely_new = cand.join(hits, "url", "left_anti")
     # every truly-seen candidate lands in probably_seen (no FN)
     assert probably_seen.join(seen, "url", "left_semi").count() == 500
     # definitely_new contains no seen URL

@@ -1,6 +1,6 @@
 """Sharded cuckoo seen-set: no false negatives, delete semantics (the
-Bloom-missing capability), merge union, determinism, drop-in parity
-with bloom.split_candidates, and hole-safety of insert-after-delete."""
+Bloom-missing capability), merge union, determinism, drop-in probe
+parity with bloom.probe, and hole-safety of insert-after-delete."""
 
 import numpy as np
 import pytest
@@ -133,14 +133,27 @@ def test_deterministic_tables(spark, seen):
 
 
 def test_split_candidates_parity_with_bloom(spark, cf, seen):
-    """Drop-in contract: cuckoo split == bloom split == ground truth
-    on a half-seen/half-new candidate set (both have ~0 FP here)."""
+    """Drop-in contract: the cuckoo probe splits candidates exactly
+    like the bloom probe == ground truth on a half-seen/half-new
+    candidate set (both have ~0 FP here)."""
     cand = seen.limit(2000).unionByName(_urls(spark, "zz", 2000)).cache()
     bf = B.build(
         seen, n_shards=N_SHARDS, expected_keys_per_shard=N // N_SHARDS, fpr=1e-6
     ).cache()
-    cs, cn = C.split_candidates(cf, cand, n_shards=N_SHARDS)
-    bs, bn = B.split_candidates(bf, cand, n_shards=N_SHARDS)
+
+    def split(mod, filt):
+        hits = (
+            mod.probe(filt, cand, n_shards=N_SHARDS)
+            .filter(F.col("maybe_seen"))
+            .select("url")
+        )
+        return (
+            cand.join(hits, "url", "left_semi"),
+            cand.join(hits, "url", "left_anti"),
+        )
+
+    cs, cn = split(C, cf)
+    bs, bn = split(B, bf)
     assert sorted(r["url"] for r in cs.collect()) == sorted(
         r["url"] for r in bs.collect()
     )
@@ -151,11 +164,21 @@ def test_split_candidates_parity_with_bloom(spark, cf, seen):
 
 def test_overflow_raises_not_drops(spark):
     """A shard pushed far past capacity must raise, never silently
-    drop keys (a dropped key would be a false negative)."""
+    drop keys (a dropped key would be a false negative) — by build,
+    and by merge of two filters that each fit but not together."""
     many = _urls(spark, "of", 4000)
-    with pytest.raises(Exception, match="overflow|MAX_KICKS|cuckoo"):
+    one = dict(n_shards=1, expected_keys_per_shard=16)  # 32 slots
+    for overfill in (
         # 4000 keys into ~16 shards sized for 16 keys/shard
-        C.build(many, n_shards=16, expected_keys_per_shard=16).count()
+        lambda: C.build(many, n_shards=16, expected_keys_per_shard=16),
+        # 2 x 24 keys into one 32-slot shard
+        lambda: C.merge(
+            C.build(_urls(spark, "ma", 24), **one),
+            C.build(_urls(spark, "mb", 24), **one),
+        ),
+    ):
+        with pytest.raises(Exception, match="overflow|MAX_KICKS|cuckoo"):
+            overfill().count()
 
 
 def test_compact_preserves_multiset():

@@ -1,5 +1,5 @@
 """S2 HTML parsing: link extraction + text conversion (functions/html.py)
-and the raw-markup crawl path (pandas_html_fetcher).
+and the raw-markup crawl path (fetch_and_parse).
 
 The strongest check is the last one: a crawl whose fetcher returns raw
 HTML bytes must produce byte-identical state to the crawl that gets the
@@ -71,7 +71,9 @@ def test_render_html_round_trip_over_synthetic_web():
 def test_html_crawl_path_equals_preparsed_path(spark):
     cfg = _tp(wave_size=1)
     base = CrawlEngine(spark, cfg).run(max_steps=6)
-    html = CrawlEngine(spark, cfg, html_fetch_fn=SW.fetch_html).run(max_steps=6)
+    html = CrawlEngine(
+        spark, cfg, fetch_fn=HT.fetch_and_parse(SW.fetch_html)
+    ).run(max_steps=6)
 
     def snap(st):
         return {

@@ -178,9 +178,9 @@ def test_compaction_reduces_files_and_conserves_rows(spark, tmp_path):
     acc = IS.read_images_state(spark, state)
     frag_files = sum(
         1
-        for root, _, fs in _os.walk(state)
+        for _, _, fs in _os.walk(_os.path.join(state, "accepted"))
         for f in fs
-        if f.endswith(".parquet") and "/v" in root + "/"
+        if f.endswith(".parquet")
     )
     store = ImageStore(spark, name="t_compact", n_buckets=4)
     compacted = IS.compact_into_store(spark, state, store)

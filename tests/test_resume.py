@@ -89,7 +89,7 @@ def test_flushed_but_uncommitted_segments_invisible(spark, tmp_path):
     # crash mid-wave-3: one more step appends pending deltas; flush
     # them to segments but never commit the manifest
     eng.step()
-    eng._flush_pending()
+    eng.store.flush(eng.state.wave)
     del eng
 
     eng_b = CrawlEngine.resume(spark, cfg, ckpt)
@@ -167,3 +167,52 @@ def test_checkpoint_snapshot_dirs_are_garbage_collected(spark, tmp_path):
     # the committed snapshot is intact and loadable
     _, tables = store.load_snapshot(spark)
     assert tables["tbl"].count() == 5
+
+
+def test_table_store_commit_rules(spark, tmp_path):
+    """The rules of the one commit path every durable state uses: a
+    tombstone deletes the rows appended before it and none after it, a
+    flushed segment no commit names is invisible (and the next writer
+    reuses its name), and the streaming upserts treat a batch id at or
+    below the manifest's commit id as already applied."""
+    from gocrawler_spark.streaming import corpus_stream as CS
+    from gocrawler_spark.streaming import image_stream as IS
+    from gocrawler_spark.streaming import warc_stream as WS
+
+    def urls(*us):
+        return spark.createDataFrame([(u,) for u in us], "url string")
+
+    def pages(root):
+        df = TableStore(root).load_table(spark, "pages")
+        return sorted(r["url"] for r in df.collect())
+
+    root = str(tmp_path / "ts")
+    store = TableStore(root)
+    store.append("pages", urls("a", "b", "c"))
+    store.tombstone("pages", urls("a", "b"), 1)
+    store.append("pages", urls("a"))  # re-appended after the tombstone
+    store.commit(1, {})
+    assert pages(root) == ["a", "c"]
+
+    store.append("pages", urls("d"))
+    store.flush(2)  # crash before the commit
+    assert pages(root) == ["a", "c"]
+    reopened = TableStore(root)
+    reopened.append("pages", urls("e"))
+    reopened.commit(2, {})
+    assert pages(root) == ["a", "c", "e"]
+    segs = TableStore(root).read_manifest()["tables"]["pages"]["segments"]
+    assert [os.path.basename(s["path"]) for s in segs] == [
+        "seg000000", "seg000001", "seg000002", "seg000003",
+    ]
+    assert [s.get("kind") for s in segs] == [None, "tombstone", None, None]
+
+    for upsert in (
+        CS.corpus_upsert(_tp(), root),
+        IS.image_upsert(root),
+        WS.warc_upsert(root),
+    ):
+        for batch_id in (1, 2):
+            upsert(None, batch_id)  # a no-op never reads its batch
+    assert TableStore(root).read_manifest()["wave"] == 2
+    assert pages(root) == ["a", "c", "e"]

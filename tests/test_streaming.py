@@ -243,7 +243,7 @@ def test_streaming_corpus_top100_commits_per_file(spark):
     import os
     import tempfile
 
-    import gocrawler_spark.streaming.corpus_stream as CS
+    from gocrawler_spark.plans.store import TableStore
     from gocrawler_spark.queries.stream_q import (
         N_BATCH_FILES,
         streaming_corpus_top100,
@@ -257,5 +257,5 @@ def test_streaming_corpus_top100_commits_per_file(spark):
     state = os.path.join(
         tempfile.gettempdir(), "gocrawler_spark_stream_q", "state"
     )
-    man = CS._read_state_manifest(state)
-    assert man is not None and man["batch_id"] == N_BATCH_FILES - 1
+    man = TableStore(state).read_manifest()
+    assert man is not None and man["wave"] == N_BATCH_FILES - 1
