@@ -13,10 +13,11 @@ Scale design (the whole point):
   too big for one blob, fine as `n_shards` host-hash shards: 4096
   shards ≈ 8.8 MB each, each shard an opaque BINARY cell in a
   DataFrame row `(shard, bitmap, n_keys, m_bits, k_hashes)`.
-- shard routing = `xxhash64(url) % n_shards` (JVM-side xxhash64 —
-  whole-stage codegen, no Python in the row path). Build and probe
-  both repartition BY SHARD, so the blob and its keys are colocated
-  and the only shuffled payload is (url, hash) pairs — never bitmaps.
+- shard routing = `url_key(url) % n_shards` (functions/urls.url_key:
+  JVM-side xxhash64 — whole-stage codegen, no Python in the row
+  path). Build and probe both repartition BY SHARD, so the blob and
+  its keys are colocated and the only shuffled payload is (url, hash)
+  pairs — never bitmaps.
 - per-shard set/test is vectorized numpy inside applyInPandas
   (Kirsch-Mitzenmacher double hashing: idx_i = h1 + i*h2 mod m —
   2 derived hashes serve all k probes).
@@ -39,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from gocrawler_spark.functions import urls as U
 
 _M64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 
@@ -71,15 +74,19 @@ def geometry(expected_keys_per_shard: int, fpr: float) -> tuple[int, int]:
 
 
 def _hash_cols(df: DataFrame, url_col: str, n_shards: int) -> DataFrame:
-    """JVM-side xxhash64 → (shard, h). No Python in the row path."""
-    h = F.xxhash64(F.col(url_col))
+    """(shard, h) from the seen-set key U.url_key (JVM-side xxhash64,
+    no Python in the row path). Shared with operators/cuckoo.py: the
+    shard uses the raw hash and the per-shard structures derive their
+    indices from splitmix64(h), so the two stay independent and
+    occupancy stays uniform within a shard."""
+    h = U.url_key(F.col(url_col))
     return df.withColumn("h", h).withColumn(
         "shard", F.pmod(h, F.lit(n_shards)).cast("int")
     )
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
-    x = (x + np.uint64(0x9E3779B97F4A7C15)) & _M64
+    x = (x.astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15)) & _M64
     x = ((x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & _M64
     x = ((x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & _M64
     return x ^ (x >> np.uint64(31))

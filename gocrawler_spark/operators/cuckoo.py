@@ -12,10 +12,11 @@ affected shards only.
 
 Same distribution shape as bloom.py (same reasons, see there):
 
-- shard routing = JVM-side `xxhash64(url) % n_shards` — build, probe,
-  delete and merge all repartition BY SHARD, so the table blob and
-  its keys are colocated and only (url, hash) 16-byte pairs shuffle;
-  blobs move at most once per shard per operation.
+- shard routing = JVM-side `url_key(url) % n_shards` (bloom._hash_cols,
+  shared with the Bloom filter) — build, probe, delete and merge all
+  repartition BY SHARD, so the table blob and its keys are colocated
+  and only (url, hash) 16-byte pairs shuffle; blobs move at most once
+  per shard per operation.
 - one shard = one row `(shard, table binary, n_buckets, bucket_size,
   n_keys)`; the blob is a little-endian uint32 array of shape
   (n_buckets, bucket_size), 0 = empty slot.
@@ -55,7 +56,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_M64 = np.uint64(0xFFFFFFFFFFFFFFFF)
+from gocrawler_spark.operators.bloom import (
+    PROBE_SCHEMA,
+    _hash_cols,
+    _splitmix64,
+)
+
 MAX_KICKS = 500
 
 CUCKOO_SCHEMA = T.StructType(
@@ -67,21 +73,6 @@ CUCKOO_SCHEMA = T.StructType(
         T.StructField("n_keys", T.LongType(), False),
     ]
 )
-
-PROBE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("maybe_seen", T.BooleanType(), False),
-    ]
-)
-
-
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    x = (x.astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15)) & _M64
-    x = ((x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & _M64
-    x = ((x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & _M64
-    return x ^ (x >> np.uint64(31))
-
 
 def geometry(
     expected_keys_per_shard: int, bucket_size: int = 4, load: float = 0.84
@@ -186,17 +177,6 @@ def _kick_place(table: np.ndarray, fps: np.ndarray, buckets: np.ndarray) -> None
                 f"(load {int((table != 0).sum())}/{table.size}); "
                 "size the shard with geometry() or raise n_shards"
             )
-
-
-def _hash_cols(df: DataFrame, url_col: str, n_shards: int) -> DataFrame:
-    """JVM-side xxhash64 → (shard, h). No Python in the row path.
-    NOTE: shard uses the raw hash, bucket uses splitmix64(h) — the
-    two deriveds are independent so bucket occupancy stays uniform
-    within a shard."""
-    h = F.xxhash64(F.col(url_col))
-    return df.withColumn("h", h).withColumn(
-        "shard", F.pmod(h, F.lit(n_shards)).cast("int")
-    )
 
 
 def _hnp(pdf: pd.DataFrame) -> np.ndarray:

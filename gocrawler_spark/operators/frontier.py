@@ -11,9 +11,10 @@ Spark-first design:
   selection-time `!isBanned && linkSeemsOk(url, true)` predicate
   (crawler.go:407) once at insert.
 - wave-local dedup is a groupBy on the URL (one shuffle, map-side
-  combine); cross-wave dedup + in-degree merge is a full outer join on
-  url — at scale both sides are bucketed/partitioned by xxhash64(url)
-  so the join is co-located (see plans/crawl.py notes).
+  combine); cross-wave dedup + in-degree merge is ONE operator,
+  merge_into_frontier (left join + anti join on (domain, url)) — the
+  domain-bucketed scale mode runs it over its bucketed scan, so the
+  join is co-located (plans/bucketed.py).
 - selection is a ranking window partitioned by domain (top-k per host)
   + a global TakeOrderedAndProject — no driver-side loop.
 
@@ -25,10 +26,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gocrawler_spark.config import CrawlConfig
 from gocrawler_spark.functions import urls as U
+
+# above this many probably-seen rows the Bloom split stops forcing a
+# broadcast of its probe side and leaves the join to the planner
+BROADCAST_MAX_ROWS = 200_000
+
 
 def _assign_seq(new_rows: DataFrame, base: int) -> DataFrame:
     """Dense insertion seq for new URLs ordered by first_at =
@@ -78,22 +83,6 @@ def _assign_seq(new_rows: DataFrame, base: int) -> DataFrame:
         "seq",
         (F.lit(base) + F.col("offset") + F.col("local_rank") - 1).cast("long"),
     ).drop("p", "offset", "local_rank")
-
-
-FRONTIER_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("domain", T.StringType(), True),
-        T.StructField("count", T.LongType(), False),
-        T.StructField("status", T.IntegerType(), False),
-        T.StructField("seq", T.LongType(), False),
-        T.StructField("eligible", T.BooleanType(), False),
-    ]
-)
-
-
-def empty_frontier(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], FRONTIER_SCHEMA)
 
 
 def bootstrap_frontier(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
@@ -168,24 +157,33 @@ def candidate_links(pages: DataFrame, cfg: CrawlConfig) -> DataFrame:
 def merge_into_frontier(
     frontier: DataFrame,
     cand: DataFrame,
-    cfg: CrawlConfig,
     bloom: DataFrame | None = None,
     n_shards: int = 64,
     pin=None,
-    broadcast_max_rows: int = 200_000,
     base: int | None = None,
 ) -> DataFrame:
     """F5/A4 cross-wave merge: existing URLs get count += delta; new
     URLs are appended with insertion seq = max_seq + rank by
     (first parent_seq, first pos) — reproducing the reference's
-    append order exactly at wave=1.
+    append order exactly at wave=1. The ONLY frontier merge: the
+    pinned engine, the Bloom split and the domain-bucketed table
+    (plans/bucketed.py) all run this body.
+
+    Both joins are keyed on (domain, url). url alone determines the
+    row (url functionally determines domain, and candidate_links drops
+    empty domains), so the result equals a url equi-join — but a
+    domain-bucketed frontier scan already provides
+    HashPartitioning(domain), which co-partitions with these keys
+    (requireAllClusterKeysForCoPartition=false): a domain-aligned
+    candidate side takes the only Exchange and the frontier is
+    scanned in place, never shuffled.
 
     Physical design (the measured-at-5M-rows version):
     - count update = frontier LEFT JOIN candidates. With the Bloom
       split the probe side is tiny (true dups + FPR·new) and is
       broadcast — the 1e10-row frontier is never shuffled. Without
       Bloom, Catalyst/AQE picks the strategy (broadcast when the wave
-      is small enough, else a co-located SMJ against the url-bucketed
+      is small enough, else a co-located SMJ against the bucketed
       frontier table).
     - new rows = candidates ANTI JOIN frontier (skipped entirely for
       the Bloom definitely-new set), PINNED via localCheckpoint before
@@ -235,7 +233,7 @@ def merge_into_frontier(
         definitely_new = cand.join(
             probably_seen.select("url"), "url", "left_anti"
         )
-        if probably_seen.count() <= broadcast_max_rows:
+        if probably_seen.count() <= BROADCAST_MAX_ROWS:
             probe = F.broadcast(probably_seen)
         else:
             probe = probably_seen
@@ -243,19 +241,20 @@ def merge_into_frontier(
         probably_seen, definitely_new = cand, None
         probe = probably_seen
 
+    keys = ["domain", "url"]
     updated = (
         frontier.alias("f")
-        .join(probe.alias("c").select("url", "delta"), "url", "left")
+        .join(probe.alias("c").select(*keys, "delta"), keys, "left")
         .select(
             "url",
-            F.col("f.domain").alias("domain"),
+            "domain",
             (F.col("f.count") + F.coalesce(F.col("delta"), F.lit(0))).alias("count"),
             F.col("f.status").alias("status"),
             F.col("f.seq").alias("seq"),
             F.col("f.eligible").alias("eligible"),
         )
     )
-    fp_new = probably_seen.join(frontier.select("url"), "url", "left_anti")
+    fp_new = probably_seen.join(frontier.select(*keys), keys, "left_anti")
     new_src = (
         fp_new if definitely_new is None else definitely_new.unionByName(fp_new)
     )

@@ -7,12 +7,14 @@ cannot scale. Both frontier consumers can be served without one:
 - **selection** (F7/F8): the per-host budget window requires
   ClusteredDistribution(domain) — a scan of a domain-bucketed table
   already provides HashPartitioning(domain, n) → no Exchange at all.
-- **merge** (F5/A4): dedup/count-update joins are keyed by url, and
-  url functionally determines domain, so joining on (domain, url) is
-  equivalent — and with `spark.sql.requireAllClusterKeysForCoPartition
-  =false` Spark accepts the bucketed HashPartitioning(domain) as
-  co-partitioning for those keys. The wave-sized candidate side takes
-  the only Exchange; the frontier side is scanned in place.
+- **merge** (F5/A4): the merge IS FR.merge_into_frontier, run over
+  the bucketed scan with a domain-aligned candidate side. Its joins
+  are keyed on (domain, url) — equivalent to url, which functionally
+  determines domain — and with
+  `spark.sql.requireAllClusterKeysForCoPartition=false` Spark accepts
+  the bucketed HashPartitioning(domain) as co-partitioning for those
+  keys. The wave-sized candidate side takes the only Exchange; the
+  frontier side is scanned in place.
 
 With `spark.sql.legacy.bucketedTableScan.outputOrdering=true` and one
 file per bucket (guaranteed by repartitioning on domain before the
@@ -26,19 +28,17 @@ is illegal, and alternation gives crash safety (the previous wave's
 table is intact until the next flip). This is the Parquet stand-in
 for Iceberg snapshot-and-swap.
 
-Session configs required (asserted by `required_confs`, applied by
-`apply_confs`): see CONFS.
+Session configs required (applied by `apply_confs` / `set_confs`):
+see CONFS.
 
-Replaces reference semantics: same operators as operators/frontier.py
-(addLink crawler.go:425-470, getNextLink crawler.go:384-423), only
-the physical strategy differs; merge results are asserted identical
-to merge_into_frontier in tests/test_bucketed.py.
+Replaces reference semantics: the operators of operators/frontier.py
+(addLink crawler.go:425-470, getNextLink crawler.go:384-423) run
+unchanged over the bucketed scan; only the physical layout differs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from gocrawler_spark.operators import frontier as FR
 
@@ -110,65 +110,15 @@ class BucketedFrontier:
         )
 
     def merge(self, cand: DataFrame, pin=None, base: int | None = None) -> DataFrame:
-        """F5/A4 merge against the bucketed frontier.
-
-        Physical plan (the 1e10 shape):
-        - candidates get ONE wave-sized Exchange by domain into bucket
-          alignment (`repartition(n_buckets, domain)`), then
-        - new rows  = cand ANTI JOIN frontier on (domain, url): SMJ
-          with the frontier scanned in place (no Exchange, no Sort —
-          the table is stored sorted by the join keys);
-        - updated   = frontier LEFT JOIN cand on (domain, url): same
-          co-located shape;
-        - seq assignment = FR._assign_seq (two-level rank, no global
-          single-partition window).
-        The frontier is scanned twice and shuffled zero times; total
-        shuffled bytes per wave are O(wave), not O(frontier).
-
-        Semantics are identical to FR.merge_into_frontier (asserted in
-        tests/test_bucketed.py): url determines domain, so the
-        (domain, url) equi-join equals the url equi-join.
-        """
-        frontier = self.df()
-        if base is None:
-            # engines that track max_seq incrementally (it is state
-            # metadata, like an Iceberg snapshot property) pass `base`
-            # and skip this aggregation job
-            max_seq = frontier.agg(F.max("seq")).first()[0]
-            base = (max_seq if max_seq is not None else -1) + 1
-        if pin is None:
-            pin = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
-
-        candp = cand.repartition(self.n_buckets, "domain")
-        new_src = pin(
-            candp.join(
-                frontier.select("domain", "url"), ["domain", "url"], "left_anti"
-            ).select("url", "domain", "delta", "first_at")
+        """F5/A4 merge against the bucketed frontier: FR.merge_into_frontier
+        over the bucketed scan, with the candidates given ONE wave-sized
+        Exchange by domain into bucket alignment. Both (domain, url)
+        joins then scan the frontier in place (no Exchange, no Sort —
+        the table is stored sorted by the join keys), so shuffled bytes
+        per wave are O(wave), not O(frontier)."""
+        return FR.merge_into_frontier(
+            self.df(),
+            cand.repartition(self.n_buckets, "domain"),
+            pin=pin,
+            base=base,
         )
-        new = FR._assign_seq(new_src, base).select(
-            "url",
-            "domain",
-            F.col("delta").cast("long").alias("count"),
-            F.lit(0).alias("status"),
-            "seq",
-            F.lit(True).alias("eligible"),
-        )
-        updated = (
-            frontier.alias("f")
-            .join(
-                candp.select("domain", "url", "delta").alias("c"),
-                ["domain", "url"],
-                "left",
-            )
-            .select(
-                "url",
-                "domain",
-                (F.col("f.count") + F.coalesce(F.col("delta"), F.lit(0))).alias(
-                    "count"
-                ),
-                F.col("f.status").alias("status"),
-                F.col("f.seq").alias("seq"),
-                F.col("f.eligible").alias("eligible"),
-            )
-        )
-        return updated.unionByName(new)

@@ -8,7 +8,8 @@ Each wave is ONE declarative DataFrame job graph (SURVEY.md §2.8):
             ──┬─ curation column chain → gates → signature dedup
               │      → accepted docs → corpus_freq MERGE
               └─ link explode → validate/ban filters → wave-local
-                 groupBy dedup → frontier full-outer MERGE
+                 groupBy dedup → frontier MERGE (merge_into_frontier,
+                 fused with the wave's status transitions)
 
 With wave_size=1 the engine reproduces the reference's sequential
 schedule exactly (crawl order, URL-seen set, accepted docs, corpus
@@ -16,8 +17,10 @@ frequencies — verified against oracle/pyoracle.py). With wave_size=k
 it is the scale mode: the same plan, more rows per wave.
 
 Scale design (100 TB / 1e10-URL frontier):
-- frontier and pages tables are hash-partitioned on url (bucketed
-  xxhash64) so the per-wave MERGE joins are co-located;
+- the frontier is a domain-bucketed, (domain, url)-sorted table
+  (use_bucketed_frontier, plans/bucketed.py) so the per-wave
+  (domain, url) MERGE joins scan it co-located, and it is written
+  once per wave;
 - domain_counter / fail_counts are one-row-per-host dims → broadcast;
 - the fetch stage repartitions the wave by domain (salted when
   fetch_salt > 1: (domain, xxhash64(url) % salt) splits hot hosts
@@ -46,6 +49,7 @@ crawler.go:1082-1406,1477-1543.
 from __future__ import annotations
 
 import os
+import uuid
 from dataclasses import dataclass
 from typing import Callable, Iterator
 
@@ -175,15 +179,24 @@ class CrawlEngine:
         # scale mode: frontier state lives in a domain-bucketed,
         # (domain, url)-sorted table so the per-wave plans never
         # shuffle it (plans/bucketed.py). Mutually exclusive with the
-        # Bloom split only in the sense that the bucketed merge does
-        # not need it: its anti-join is already co-located.
+        # Bloom split: the bucketed merge's anti-join is already
+        # co-located, so a filter would be built and grown every wave
+        # for nothing.
         self.bfront = None
         if use_bucketed_frontier:
+            if use_bloom:
+                raise ValueError(
+                    "use_bloom and use_bucketed_frontier are mutually "
+                    "exclusive: the bucketed merge never reads the Bloom "
+                    "filter"
+                )
             from gocrawler_spark.plans.bucketed import BucketedFrontier
 
             self.bfront = BucketedFrontier(
                 spark,
-                name=f"crawl_frontier_{abs(id(self)) % 10**9}",
+                # not id(self): a collected engine's id can be reused,
+                # overwriting tables its returned state still scans
+                name=f"crawl_frontier_{uuid.uuid4().hex[:12]}",
                 n_buckets=frontier_buckets,
             )
         self.state = self._init_state()
@@ -208,10 +221,6 @@ class CrawlEngine:
         "fail_counts": ("domain", "n_failed"),
         "corpus_freq": ("token", "count"),
     }
-    _APPEND = (
-        "pages", "signatures", "crawl_log", "accepted", "ranking_rows",
-        "images", "domain_counter", "fail_counts", "corpus_freq",
-    )
 
     def _init_state(self) -> CrawlState:
         s = self.spark
@@ -528,10 +537,10 @@ class CrawlEngine:
             "url", F.when(F.col("ok"), 2).otherwise(3).alias("new_status")
         )
         # status_after is wave-sized -> broadcast: the frontier side is
-        # streamed in place (bucketed mode: scan stays bucket-aligned).
-        # Non-bucketed mode leaves this LAZY and fuses it into the
+        # streamed in place (bucketed mode: the scan stays
+        # bucket-aligned). The plan stays LAZY and is fused into the
         # link-expansion merge below — one frontier materialization per
-        # wave instead of two.
+        # wave in both modes.
         status_updated = (
             st.frontier.alias("f")
             .join(F.broadcast(status_after.alias("s")), "url", "left")
@@ -541,8 +550,6 @@ class CrawlEngine:
                 "seq", "eligible",
             )
         )
-        if self.bfront is not None:
-            self._set_frontier(status_updated)
         self._append(
             "crawl_log",
             wave_meta.select(
@@ -613,24 +620,25 @@ class CrawlEngine:
         )
         parents = boot_parents.unionByName(accepted_parents)
         cand = FR.candidate_links(parents, cfg)
+        # ONE frontier materialization per wave, in both modes: the
+        # lazy status transition plan feeds the merge directly (the
+        # bucketed mode aligns the candidates to its buckets first, as
+        # BucketedFrontier.merge does); the insertion seq base is
+        # tracked driver-side, so no extra max(seq) job runs over the
+        # unmaterialized plan.
         if self.bfront is not None:
-            self._set_frontier(self.bfront.merge(cand, pin=self._pin))
-        else:
-            # ONE frontier materialization per wave: the lazy status
-            # transition plan feeds the merge directly; the insertion
-            # seq base is tracked driver-side, so no extra max(seq)
-            # job runs over the unmaterialized plan.
-            st.frontier = self._pin(
-                FR.merge_into_frontier(
-                    status_updated, cand, cfg, bloom=st.bloom,
-                    n_shards=self.bloom_shards, pin=self._pin,
-                    base=self._next_seq,
-                )
+            cand = cand.repartition(self.bfront.n_buckets, "domain")
+        self._set_frontier(
+            FR.merge_into_frontier(
+                status_updated, cand, bloom=st.bloom,
+                n_shards=self.bloom_shards, pin=self._pin,
+                base=self._next_seq,
             )
-            # narrow max over the just-pinned blocks (no recompute)
-            m = st.frontier.agg(F.max("seq")).first()[0]
-            if m is not None:
-                self._next_seq = m + 1
+        )
+        # max over the just-materialized state (no recompute)
+        m = st.frontier.agg(F.max("seq")).first()[0]
+        if m is not None:
+            self._next_seq = m + 1
         if self.use_bloom:
             # grow the seen-set by ALL wave candidates (superset of the
             # newly appended URLs — harmless for a Bloom filter, avoids

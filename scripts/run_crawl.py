@@ -72,13 +72,16 @@ def main(argv=None) -> int:
         cfg = cfg.with_(wave_size=args.wave_size)
 
     t0 = time.time()
-    eng = CrawlEngine(
-        spark,
-        cfg,
-        checkpoint_dir=args.checkpoint,
-        use_bloom=args.bloom,
-        use_bucketed_frontier=args.bucketed,
-    )
+    try:
+        eng = CrawlEngine(
+            spark,
+            cfg,
+            checkpoint_dir=args.checkpoint,
+            use_bloom=args.bloom,
+            use_bucketed_frontier=args.bucketed,
+        )
+    except ValueError as e:  # e.g. --bloom with --bucketed
+        raise SystemExit(str(e))
     st = eng.run(max_steps=args.steps)
 
     os.makedirs(args.output, exist_ok=True)

@@ -53,6 +53,14 @@ def _cand_df(spark, n=3000, frontier_n=5000, domains=137):
     )
 
 
+def _assert_frontier_scanned_in_place(plan):
+    assert "Bucketed: true" in plan
+    # every shuffle exchange hashes candidate-side attributes —
+    # none may sit directly above the bucketed FileScan
+    for frag in re.findall(r"Exchange hashpartitioning[^\n]*\n([^\n]*)", plan):
+        assert "FileScan parquet" not in frag, plan
+
+
 @pytest.fixture(scope="module")
 def bucketed(spark):
     bf = BucketedFrontier(spark, name="t_frontier", n_buckets=8)
@@ -65,7 +73,7 @@ def test_merge_equals_plain_path(spark, bucketed):
     as merge_into_frontier. Seq values are identical because both
     paths use the same base + _assign_seq ranking."""
     cand = _cand_df(spark)
-    plain = FR.merge_into_frontier(_frontier_df(spark), cand, None)
+    plain = FR.merge_into_frontier(_frontier_df(spark), cand)
     bkt = bucketed.merge(cand)
     a = sorted(tuple(r) for r in plain.collect())
     b = sorted(tuple(r) for r in bkt.collect())
@@ -78,12 +86,9 @@ def test_merge_plan_never_shuffles_frontier(spark, bucketed):
     in place."""
     cand = _cand_df(spark)
     merged = bucketed.merge(cand)
-    plan = merged._jdf.queryExecution().executedPlan().toString()
-    assert "Bucketed: true" in plan
-    # every shuffle exchange hashes candidate-side attributes —
-    # none may sit directly above the bucketed FileScan
-    for frag in re.findall(r"Exchange hashpartitioning[^\n]*\n([^\n]*)", plan):
-        assert "FileScan parquet" not in frag, plan
+    _assert_frontier_scanned_in_place(
+        merged._jdf.queryExecution().executedPlan().toString()
+    )
 
 
 def test_select_wave_no_exchange(spark, bucketed):
@@ -118,18 +123,40 @@ def test_ping_pong_write(spark):
     assert spark.table(first_table).count() == 500
 
 
-def test_engine_bucketed_frontier_identical(spark):
+def test_engine_bucketed_frontier_identical(spark, tmp_path, monkeypatch):
     """CrawlEngine(use_bucketed_frontier=True) must be a pure physical
     optimization: identical frontier, crawl log, and corpus vs the
-    pinned-DataFrame engine on the same synthetic web."""
+    pinned-DataFrame engine on the same synthetic web. Its fused
+    per-wave merge still reads the bucketed frontier in place, and a
+    checkpoint -> resume -> one more wave equals the uninterrupted
+    bucketed run."""
     from gocrawler_spark.config import test_profile as _tp
     from gocrawler_spark.plans.crawl import CrawlEngine
 
     cfg = _tp(wave_size=8, per_host_budget=2)
     plain = CrawlEngine(spark, cfg).run(max_steps=3)
-    bkt = CrawlEngine(
-        spark, cfg, use_bucketed_frontier=True, frontier_buckets=4
-    ).run(max_steps=3)
+
+    plans = []
+    merge = FR.merge_into_frontier
+
+    def spy(*a, **kw):
+        out = merge(*a, **kw)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(FR, "merge_into_frontier", spy)
+    kw = dict(use_bucketed_frontier=True, frontier_buckets=4)
+    bkt = CrawlEngine(spark, cfg, **kw).run(max_steps=3)
+    monkeypatch.undo()
+    assert len(plans) == 3  # one merge per wave
+    for plan in plans:
+        _assert_frontier_scanned_in_place(plan)
+
+    ckpt = str(tmp_path / "ckpt")
+    CrawlEngine(spark, cfg, checkpoint_dir=ckpt, **kw).run(max_steps=2)
+    resumed = CrawlEngine.resume(spark, cfg, ckpt, **kw)
+    assert resumed.state.wave == 2
+    resumed = resumed.run(max_steps=1)
 
     def snap(st):
         fr = sorted(
@@ -141,3 +168,31 @@ def test_engine_bucketed_frontier_identical(spark):
         return fr, log, corp
 
     assert snap(plain) == snap(bkt)
+    assert snap(resumed) == snap(bkt)
+
+
+def test_engine_rejects_bloom_with_bucketed_frontier(spark, tmp_path):
+    """The bucketed merge never reads a Bloom filter, so asking for both
+    is refused up front, by the engine and by the spark-submit
+    entrypoint."""
+    import importlib.util
+    import os
+
+    from gocrawler_spark.config import test_profile as _tp
+    from gocrawler_spark.plans.crawl import CrawlEngine
+
+    with pytest.raises(ValueError, match="mutually exclusive"):
+        CrawlEngine(
+            spark, _tp(), use_bloom=True, use_bucketed_frontier=True
+        )
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts", "run_crawl.py",
+    )
+    spec = importlib.util.spec_from_file_location("run_crawl", path)
+    run_crawl = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run_crawl)
+    with pytest.raises(SystemExit, match="mutually exclusive"):
+        run_crawl.main(
+            ["--bloom", "--bucketed", "--output", str(tmp_path / "out")]
+        )

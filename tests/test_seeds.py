@@ -133,7 +133,7 @@ def test_merge_into_frontier_ingests_seeds(spark):
     cand = sitemap_candidates(
         discover_from_hosts(hosts, _fetch_fn(), AGENT), cfg
     )
-    merged = FR.merge_into_frontier(frontier, cand, cfg)
+    merged = FR.merge_into_frontier(frontier, cand)
     rows = {r["url"]: r for r in merged.collect()}
     # 1 bootstrap + 3 genuinely new (the dup URL was already seeded)
     assert len(rows) == 4
